@@ -13,6 +13,10 @@ rounded on both sides so the value-hash is stable.
 
 from __future__ import annotations
 
+import atexit
+import shutil
+import tempfile
+import threading
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -24,77 +28,72 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 # ----------------------------------------------------------------- entry
-def entry(spark: SparkSession) -> DataFrame:
-    """Flagship: the 4-stage KG pipeline over transcripts synthesized
-    deterministically (BASELINE.json input_hint), plus a pass of the same
-    stage-0/1 plumbing over sf0.001 documents rendered as transcripts."""
+# entry() and the four kg_* queries are projections of ONE checkpointed
+# Pipeline.run over the 6-conversation fixture — the path users run — made
+# once per SparkContext (its committed tables read back lazily, bound to
+# that context's session).
+_KG_RUNS: dict = {}
+_KG_LOCK = threading.Lock()
+
+
+def _kg_run(spark: SparkSession):
+    """→ the memoised PipelineResult for this SparkContext."""
     from information_extraction_from_biographies_spark import fixtures as fx
-    from information_extraction_from_biographies_spark.operators import mentions, normalize, scan, triples
+    from information_extraction_from_biographies_spark.plans.pipeline import Pipeline
 
-    docs = _t(spark, "/root/testdata/sf0.001", "documents")
-    doc_transcripts = docs.select(
-        F.col("source").alias("conv_id"),
-        (F.row_number().over(Window.partitionBy("source").orderBy("doc_id")) - 1).alias("turn_idx"),
-        F.lit("user").alias("role"),
-        F.col("text"),
-        F.lit(None).cast("string").alias("tool"),
-        F.lit("2024-01-01 00:00:00").cast("timestamp").alias("ts"),
-    )
-    tdf = fx.transcripts_sdf(spark, n_convs=6).unionByName(doc_transcripts)
+    key = spark.sparkContext.applicationId
+    with _KG_LOCK:
+        if key not in _KG_RUNS:
+            warehouse = tempfile.mkdtemp(prefix="kg_entry_")
+            atexit.register(shutil.rmtree, warehouse, True)
+            # gram_index=False: the posting index serves only incremental
+            # rescans, which no driver query runs
+            _KG_RUNS[key] = Pipeline(
+                spark, warehouse, snapshot_id="kg", gram_index=False
+            ).run(fx.transcripts_sdf(spark, n_convs=6))
+        return _KG_RUNS[key]
 
-    turns, meta = normalize.normalize(tdf)
-    conv_names, conv_aliases = mentions.extract_people(turns, meta)
-    people, aliases = mentions.build_registry(conv_names, conv_aliases)
-    index = scan.build_surface_index(mentions.registry_surfaces(people, aliases))
-    return triples.all_triples(conv_aliases, turns, meta, index)
+
+def entry(spark: SparkSession) -> DataFrame:
+    """Flagship: the stage-2 triple table of the 4-stage KG pipeline over
+    transcripts synthesized deterministically (BASELINE.json input_hint)."""
+    return _kg_run(spark).tables["triples"]
 
 
 # ------------------------------------------------------------- kg (rows-only)
-def _kg_tables(spark: SparkSession):
-    from information_extraction_from_biographies_spark import fixtures as fx
-    from information_extraction_from_biographies_spark.operators import mentions, normalize, scan
-
-    tdf = fx.transcripts_sdf(spark, n_convs=6)
-    turns, meta = normalize.normalize(tdf)
-    conv_names, conv_aliases = mentions.extract_people(turns, meta)
-    people, aliases = mentions.build_registry(conv_names, conv_aliases)
-    index = scan.build_surface_index(mentions.registry_surfaces(people, aliases))
-    return turns, meta, conv_aliases, people, aliases, index
-
-
 def _kg_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from information_extraction_from_biographies_spark.operators import triples
-
-    turns, meta, conv_aliases, _p, _a, index = _kg_tables(spark)
-    return triples.all_triples(conv_aliases, turns, meta, index).select(
-        "conv_id", "subj", "pred", "obj", "source"
-    )
+    return _kg_run(spark).tables["triples"].select("conv_id", "subj", "pred", "obj", "source")
 
 
 def _kg_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from information_extraction_from_biographies_spark.operators import cooccurrence, scan
-
-    turns, meta, _ca, _p, _a, index = _kg_tables(spark)
-    rows = scan.scan_mentions(turns, index)
-    return cooccurrence.cooccurrence_scores(
-        scan.occurrences(rows), scan.persons_in_conv(rows), meta
-    ).select("conv_id", "name1", "name2", F.round("score", 6).alias("score"))
+    return _kg_run(spark).tables["cooccurrence"].select(
+        "conv_id", "name1", "name2", F.round("score", 6).alias("score")
+    )
 
 
 def _kg_timeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """N6 both modes side by side, as the reference emits them
     (Get_Timeline.py:103-113 writes raw and concise dumps together):
     (conv_id, year, event, event_concise) — concise = the dependency-
-    annotator condensation (Get_Timeline.py:63-83). Rows-only (NLP)."""
+    annotator condensation (Get_Timeline.py:63-83) with the registry's
+    surfaces as its lexicon. Rows-only (NLP)."""
     from information_extraction_from_biographies_spark.operators import graph, triples
 
-    turns, _m, _ca, _p, _a, index = _kg_tables(spark)
-    surfaces = sorted({s for (s, _p2, _k) in index.rows})
-    raw = graph.timeline_final(triples.timeline_table(turns))
+    res = _kg_run(spark)
+    surfaces = sorted(
+        {
+            r[0]
+            for r in res.tables["people"]
+            .select("name")
+            .union(res.tables["aliases"].select("alias"))
+            .collect()
+            if r[0] is not None
+        }
+    )
     concise = graph.timeline_final(
-        triples.timeline_table(turns, concise=True, surfaces=surfaces)
+        triples.timeline_table(res.tables["turns"], concise=True, surfaces=surfaces)
     ).select("conv_id", "year", F.col("event").alias("event_concise"))
-    return raw.join(concise, ["conv_id", "year"], "left")
+    return res.tables["timeline"].join(concise, ["conv_id", "year"], "left")
 
 
 def _kg_entities(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -103,24 +102,19 @@ def _kg_entities(spark: SparkSession, sf_dir: str) -> DataFrame:
     matches the reference's interactive query `出生 >= 1882`
     (Biographee_Info.py:36-66) — the predicate compiler and the entity
     table exercised together. Rows-only (NLP upstream)."""
-    from information_extraction_from_biographies_spark.operators import (
-        biographee,
-        canonicalize,
-        triples as tr,
-    )
+    from information_extraction_from_biographies_spark.operators import biographee
 
-    turns, meta, _ca, people, aliases, _i = _kg_tables(spark)
-    entities = canonicalize.entity_table(people, aliases)
-    home = tr.hometown_triples(turns, meta)
+    res = _kg_run(spark)
+    home = res.tables["triples"].filter(F.col("source") == "born-in")
     # query_biographees is one row per (meta row × distinct hometown);
     # distinct() collapses multi-hometown biographees so the left join
     # below stays 1:1 per canonical name
     matched = (
-        biographee.query_biographees(meta, home, "出生 >= 1882")
+        biographee.query_biographees(res.tables["meta"], home, "出生 >= 1882")
         .select("name", F.lit(True).alias("matches_query"))
         .distinct()
     )
-    return entities.join(matched, "name", "left").select(
+    return res.tables["entities"].join(matched, "name", "left").select(
         "name", "entity_id", F.coalesce("matches_query", F.lit(False)).alias("matches_query")
     )
 

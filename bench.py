@@ -12,10 +12,11 @@ is printed on a separate earlier line and written to
 which outgrew the driver's tail capture and left the round unrecorded
 (BENCH_r03 parsed:null).
 
-The flagship measurement is the full 4-stage KG pipeline over a scaled
-deterministic transcript table (generated distributed via mapInPandas —
-the same mechanism that generates 10^9 rows on a cluster); its throughput
-in triples/sec is reported alongside the per-query walls.
+The flagship measurement is the full 4-stage checkpointed KG pipeline
+(``Pipeline.run``, commit I/O included) over a scaled deterministic
+transcript table (generated distributed via mapInPandas — the same
+mechanism that generates 10^9 rows on a cluster); its throughput in
+triples/sec is reported alongside the per-query walls.
 """
 
 from __future__ import annotations
@@ -91,18 +92,8 @@ def _wait_for_quiet(
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 import __spark_entry__ as entry
-from pyspark.sql import functions as F  # noqa: N812
 
 from information_extraction_from_biographies_spark import fixtures as fx
-from information_extraction_from_biographies_spark.operators import (
-    canonicalize,
-    cooccurrence,
-    mentions,
-    normalize,
-    scan,
-    stage2,
-    triples,
-)
 from information_extraction_from_biographies_spark.session import get_spark
 
 # Relational / training-data headliners run from the driver contract at sf dir.
@@ -148,21 +139,19 @@ def materialize_transcripts(
 def kg_pipeline_run(
     spark, n_convs: int, transcripts_path: str | None = None, career_reps: int = 0
 ):
-    """End-to-end KG extraction (stages 0-4, no checkpoint I/O) over the
-    scaled transcript table; returns (wall_s, n_triples, n_turns, ...)."""
+    """End-to-end KG extraction: one checkpointed ``Pipeline.run`` (stages
+    0-4, every stage table committed) into a temp warehouse over the
+    scaled transcript table — the run users launch. Returns (wall_s,
+    n_triples, n_turns, n_cooc, n_entities); the counts are read back
+    from the committed tables after the timer stops."""
+    import shutil
+    import tempfile
+
+    from information_extraction_from_biographies_spark.plans.pipeline import Pipeline
+
     tdf = spark.read.parquet(
         materialize_transcripts(spark, n_convs, transcripts_path, career_reps)
     )
-    verbose = os.environ.get("KG_BENCH_VERBOSE") == "1"
-    marks: list[tuple[str, float]] = []
-
-    def mark(label):
-        if verbose:
-            marks.append((label, time.monotonic()))
-            if len(marks) > 1:
-                sys.stderr.write(
-                    f"STEP {marks[-2][0]:>14s}..{label:<14s} {marks[-1][1]-marks[-2][1]:6.1f}s\n"
-                )
 
     # Untimed warmup: spawn the python worker pool and touch the input
     # once. Analogous to excluding JVM startup — worker-pool spawn is a
@@ -174,58 +163,15 @@ def kg_pipeline_run(
 
     tdf.select("conv_id").mapInPandas(_noop, "conv_id string").count()
 
-    t0 = time.monotonic()
-    mark("start")
-    # Action structure tuned for sandbox fixed costs AND concurrency:
-    # (1) the driver-side registry collect materializes the cached
-    #     turns/extraction chain as a side effect — the probe dictionary
-    #     comes from the FUSED one-shuffle surfaces aggregate
-    #     (registry_surfaces_fused), not the 3-shuffle registry chain,
-    # (2) one job materializes the fused stage-2 pass,
-    # (3) the downstream branches (triples, co-occurrence, entities/CC —
-    #     the last now size-gated through the driver union-find) run as
-    #     concurrent jobs over the cached inputs. (Submitting the entities
-    #     count concurrently WITH the fused pass was tried and reverted:
-    #     indistinguishable from host noise and it muddies the step
-    #     attribution the verdict audits.)
-    turns, meta = normalize.normalize(tdf)
-    parts = int(spark.conf.get("spark.sql.shuffle.partitions", "64"))
-    # ONE shuffle+sort of the big table, shared by both python passes
-    turns = (
-        turns.repartition(parts, "conv_id")
-        .sortWithinPartitions("conv_id", "turn_idx")
-        .persist()
-    )
-    meta = meta.persist()
-    extracted = mentions.extract_people_combined(turns, meta, pre_sorted=True).persist()
-    conv_names, conv_aliases = mentions.split_extracted(extracted)
-    people, aliases = mentions.build_registry(conv_names, conv_aliases)
-    people = people.persist()
-    aliases = aliases.persist()
-    surfaces_df = mentions.registry_surfaces_fused(conv_names, conv_aliases)
-    index = scan.build_surface_index(surfaces_df)  # action 1 (collect)
-    mark("index")
-
-    from concurrent.futures import ThreadPoolExecutor
-
-    fused = stage2.fused_scan_extract(turns, meta, index, pre_sorted=True).persist()
-    entities = canonicalize.entity_table(people, aliases)
-    n_turns = turns.count()
-    n_fused = fused.count()  # action 2: materialize the fused pass
-    mark("fused")
-    triple_rows = stage2.all_triples_fused(fused, conv_aliases, meta)
-    cooc = stage2.cooc_scores(fused)
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        f_tri = pool.submit(triple_rows.count)
-        f_cooc = pool.submit(cooc.count)
-        f_ent = pool.submit(entities.count)
-        n_triples, n_cooc, n_entities = f_tri.result(), f_cooc.result(), f_ent.result()
-    mark("branches")
-    wall = time.monotonic() - t0
-    del n_fused
-    for df in (turns, meta, extracted, people, aliases, fused):
-        df.unpersist()
-    return wall, n_triples, n_turns, n_cooc, n_entities
+    wh = tempfile.mkdtemp(prefix="kg_bench_")
+    try:
+        t0 = time.monotonic()
+        res = Pipeline(spark, wh, snapshot_id="bench").run(tdf)
+        wall = time.monotonic() - t0
+        n = {t: res.tables[t].count() for t in ("triples", "turns", "cooccurrence", "entities")}
+    finally:
+        shutil.rmtree(wh, ignore_errors=True)
+    return wall, n["triples"], n["turns"], n["cooccurrence"], n["entities"]
 
 
 def kg_incremental_run(spark, n_convs: int, delta_pct: float = 10.0, career_reps: int = 0):

@@ -317,6 +317,22 @@ def transcripts_sdf(spark, fixture: Fixture | None = None, n_convs: int = 20, se
     )
 
 
+def scaled_fixture(ordinal: int, seed: int = 11) -> Fixture:
+    """The single-conversation fixture ``make_scaled_transcripts`` renders
+    as conversation ``ordinal`` (its truths are that conversation's
+    goldens)."""
+    # fixed-width salt: variable-width ordinals made alias "X之3" a
+    # substring of "X之363"'s text, inflating every mention scan with
+    # false cross-conv hits
+    return make_fixture(
+        n_convs=1,
+        seed=seed + ordinal % 997,
+        alias_salt=f"之{ordinal:06d}",
+        given_offset=(ordinal * 131) % len(GIVEN_NAMES),
+        rich_aliases=False,
+    )
+
+
 def make_scaled_transcripts(
     spark,
     n_convs: int = 2000,
@@ -328,36 +344,32 @@ def make_scaled_transcripts(
     distributed (mapInPandas over a range — the same mechanism generates
     10^9 rows on a cluster; no driver-side loop).
 
-    ``career_reps`` appends that many extra copies of the two career turns
-    per conversation (turn_idx continues) — raises per-conversation text
-    volume so benchmark runs are compute-bound rather than overhead-bound,
-    without changing the entity structure."""
+    ``career_reps`` inserts that many extra copies of the two career turns
+    per conversation between the career turns and the kin turn — raises
+    per-conversation text volume so benchmark runs are compute-bound
+    rather than overhead-bound, without changing the entity structure.
+    The layout is ``t0, t1, t2, (t1, t2) x reps, t3`` numbered densely from
+    0: every (conv_id, turn_idx) key is unique and the kin turn stays last,
+    inside the final two paragraphs that spouse/children are read from."""
 
     def _gen(pdf_iter):
         for pdf in pdf_iter:
             out = []
             for ordinal in pdf["id"]:
-                # fixed-width salt: variable-width ordinals made alias
-                # "X之3" a substring of "X之363"'s text, inflating every
-                # mention scan with false cross-conv hits
-                fx = make_fixture(
-                    n_convs=1,
-                    seed=seed + int(ordinal) % 997,
-                    alias_salt=f"之{int(ordinal):06d}",
-                    given_offset=(int(ordinal) * 131) % len(GIVEN_NAMES),
-                    rich_aliases=False,
-                )
+                fx = scaled_fixture(int(ordinal), seed)
                 t = fx.transcripts.copy()
                 t["conv_id"] = t["conv_id"] + f"#{int(ordinal)}"
                 reps_here = 2500 if (skew and int(ordinal) == 0) else career_reps
                 if reps_here:
-                    reps = [t]
                     career = t[t.turn_idx.isin([1, 2])]
+                    kin = t[t.turn_idx == 3].copy()
+                    reps = [t[t.turn_idx < 3]]
                     for r in range(reps_here):
                         c = career.copy()
                         c["turn_idx"] = c["turn_idx"] + 2 * (r + 1)
                         reps.append(c)
-                    t = pd.concat(reps, ignore_index=True)
+                    kin["turn_idx"] = 3 + 2 * reps_here
+                    t = pd.concat(reps + [kin], ignore_index=True)
                 out.append(t)
             yield pd.concat(out, ignore_index=True)
 

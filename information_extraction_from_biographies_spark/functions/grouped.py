@@ -36,8 +36,8 @@ def iter_key_groups(
     must be sorted by ``key`` within the partition).
 
     Guard: a key that reappears after its group was closed means the input
-    was NOT sorted/partitioned as promised (e.g. a ``pre_sorted=True``
-    caller whose upstream plan changed under AQE) — that would silently
+    was NOT sorted/partitioned as promised (e.g. a ``pre_partitioned=True``
+    caller whose bucketed scan was split into non-bucket partitions) — that would silently
     fragment one conversation into several groups and corrupt per-conv
     results, so it raises instead. Cost: one set-add + one lookup per
     group."""
@@ -55,7 +55,7 @@ def iter_key_groups(
                 raise RuntimeError(
                     f"iter_key_groups: key {k!r} recurred non-contiguously — "
                     f"input is not sorted by {key!r} within the partition "
-                    "(pre_sorted contract violated)"
+                    "(grouped_map delivery contract violated)"
                 )
             closed.add(ck)
             yield g
@@ -99,7 +99,6 @@ def grouped_map(
     order: str = "turn_idx",
     partitions: int | None = None,
     out_rows_per_batch: int = 4096,
-    pre_sorted: bool = False,
     pre_partitioned: bool = False,
     partitioner: str = "hash",
 ) -> DataFrame:
@@ -111,12 +110,7 @@ def grouped_map(
     identical work per partition (cluster size changes how many run at
     once, not how the data is cut).
 
-    ``pre_sorted=True`` asserts the input is already hash-partitioned on
-    ``key`` and sorted by (key, order) within partitions (e.g. a persisted
-    ``repartition(N, key).sortWithinPartitions(key, order)`` shared by
-    several passes) — skips this call's shuffle + sort entirely.
-
-    ``pre_partitioned=True`` asserts only the hash-partitioning (e.g. a
+    ``pre_partitioned=True`` asserts the hash-partitioning on ``key`` (e.g. a
     snapshot committed BUCKETED on ``key`` and re-read through the
     catalog, whose per-bucket files are not mutually sorted): the shuffle
     is skipped but the partition-local sort still runs — the Exchange-free
@@ -160,8 +154,6 @@ def grouped_map(
         if buf:
             yield pd.concat(buf, ignore_index=True)
 
-    if pre_sorted:
-        return df.mapInPandas(mapper, schema=schema)
     if pre_partitioned:
         return df.sortWithinPartitions(key, order).mapInPandas(mapper, schema=schema)
     if partitioner == "range":

@@ -111,10 +111,11 @@ def compile_query(
     return pred
 
 
-def query_biographees(meta: DataFrame, hometown_triples: DataFrame, where: str) -> DataFrame:
+def query_biographees(meta: DataFrame, born_in_triples: DataFrame, where: str) -> DataFrame:
     """(name, birth, death, hometown) rows matching the query string —
-    the reference's query() projection (Biographee_Info.py:65-66)."""
-    home = hometown_triples.select(
+    the reference's query() projection (Biographee_Info.py:65-66).
+    ``born_in_triples``: the stage-2 triples with source 'born-in'."""
+    home = born_in_triples.select(
         F.col("subj").alias("biographee"), F.col("obj").alias("hometown")
     ).distinct()
     enriched = meta.join(home, "biographee", "left").select(

@@ -212,16 +212,11 @@ def alias_edges(aliases: DataFrame) -> DataFrame:
     )
 
 
-def entity_table(people: DataFrame, aliases: DataFrame, salt: int = 0) -> DataFrame:
-    """→ (name, entity_id): canonical names mapped to their component;
-    singleton names (no aliases) map to themselves."""
-    comp = connected_components(alias_edges(aliases), salt=salt)
-    return entity_table_from_labels(people, comp)
-
-
 def entity_table_from_labels(people: DataFrame, labels: DataFrame) -> DataFrame:
-    """entity_table given precomputed CC labels (vertex, component) — the
-    incremental path reuses prior labels instead of re-running CC."""
+    """→ (name, entity_id): canonical names mapped to their CC component
+    (``labels``: (vertex, component), from ``connected_components`` or the
+    incremental path's maintained labels); singleton names (no aliases)
+    map to themselves."""
     return people.join(labels, people.name == labels.vertex, "left").select(
         "name",
         F.coalesce(F.col("component"), F.col("name")).alias("entity_id"),

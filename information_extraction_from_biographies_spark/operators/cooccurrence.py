@@ -1,109 +1,26 @@
 """A2/A3/A4 — weighted depreciating co-occurrence scores.
 
 The reference materializes every mention-pair distance, sorts, and folds
-sequentially with a squared depreciation (Cooccurrence.py:92-111). The
-fold LOOKS order-sensitive, but the weight of the k-th smallest distance
-is closed-form:
+sequentially with a squared depreciation (Cooccurrence.py:92-111):
 
     weight(1) = 1
     weight(k) = 0.65 ** (2 ** (k-2))      for k >= 2
-    score     = Σ_k (4 / d_k) * weight(k)
+    score     = Σ_k (4 / d_k) * weight(k)    (d_k the k-th smallest distance)
 
-so the engine computes it with `row_number()` over (pair, distance-rank)
-plus `pow` — no collect_list, no ordered buffer, fully parallel, safe on
-hot pairs (weights underflow to 0 by k≈40; no cap needed for float64).
-
-Pair generation (A3) is a per-conversation self-join on the positioned
-occurrences (O(M²) per conversation, bounded by conversation length; AQE
-skew-join splits oversized post-shuffle partitions for giant convs).
-The biographee prior (A4, distance 2) unions in before ranking, exactly
-as the reference appends it before sorting (Cooccurrence.py:29).
+The engine runs that fold per conversation inside the fused stage-2 pass
+(``stage2.fused_scan_extract``): the conversation's positioned
+occurrences are already in the worker, so pair generation (A3), the
+distance-2 biographee prior (A4) and the fold (A2) need no pair shuffle
+and no self-join. ``conv_pair_scores`` is that per-conversation kernel;
+``fold_scores`` is the reference fold it applies per pair
+(tests/test_cooc_kernel.py checks both against a brute-force fold).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
-from pyspark.sql import functions as F  # noqa: N812
-
 from ..gazetteers import DEPRECIATE_FACTOR, DISTANCE2SCORE_FACTOR, DISTANCE_TO_BIOGRAPHEE
 
 
-def pair_distances(occurrences: DataFrame) -> DataFrame:
-    """A3: all unordered occurrence pairs within a conversation, distance =
-    pos_j - pos_i + 1 (Cooccurrence.py:68-78). Occurrences are one row per
-    (clause, person, surface) containment."""
-    w = Window.partitionBy("conv_id").orderBy("pos", "person", "surface")
-    occ = occurrences.withColumn("seq", F.row_number().over(w))
-    o1 = occ.select(
-        "conv_id",
-        F.col("person").alias("p1"),
-        F.col("pos").alias("pos1"),
-        F.col("seq").alias("seq1"),
-    )
-    o2 = occ.select(
-        "conv_id",
-        F.col("person").alias("p2"),
-        F.col("pos").alias("pos2"),
-        F.col("seq").alias("seq2"),
-    )
-    return (
-        o1.join(o2, "conv_id")
-        .filter((F.col("seq1") < F.col("seq2")) & (F.col("p1") != F.col("p2")))
-        .select(
-            "conv_id",
-            F.least("p1", "p2").alias("name1"),
-            F.greatest("p1", "p2").alias("name2"),
-            (F.col("pos2") - F.col("pos1") + F.lit(1)).cast("double").alias("distance"),
-        )
-    )
-
-
-def biographee_priors(persons_in_conv: DataFrame, meta: DataFrame) -> DataFrame:
-    """A4: constant distance-2 pair between every detected person and the
-    conversation's biographee (Cooccurrence.py:81-89).
-
-    No broadcast hint: both sides are per-conversation (corpus-scale), so
-    a forced broadcast of meta is a driver OOM at 10^12 turns. The un-
-    hinted equi-join on conv_id lets AQE broadcast only when the runtime
-    size is actually under the threshold, and degrades to a co-partitioned
-    shuffle join otherwise."""
-    joined = persons_in_conv.join(
-        meta.select("conv_id", "biographee"), "conv_id", "inner"
-    ).filter(F.col("biographee").isNotNull())
-    return joined.select(
-        "conv_id",
-        F.least("person", "biographee").alias("name1"),
-        F.greatest("person", "biographee").alias("name2"),
-        F.lit(float(DISTANCE_TO_BIOGRAPHEE)).alias("distance"),
-    )
-
-
-def score_pairs(distances: DataFrame) -> DataFrame:
-    """A2: rank-weighted sum per (conv_id, name1, name2); see module doc."""
-    w = Window.partitionBy("conv_id", "name1", "name2").orderBy("distance")
-    ranked = distances.filter(F.col("name1") != F.col("name2")).withColumn(
-        "k", F.row_number().over(w)
-    )
-    weight = F.when(F.col("k") == 1, F.lit(1.0)).otherwise(
-        F.pow(F.lit(DEPRECIATE_FACTOR), F.pow(F.lit(2.0), F.col("k") - 2))
-    )
-    contrib = (F.lit(DISTANCE2SCORE_FACTOR) / F.col("distance")) * weight
-    return (
-        ranked.withColumn("contrib", contrib)
-        .groupBy("conv_id", "name1", "name2")
-        .agg(F.sum("contrib").alias("score"))
-    )
-
-
-def cooccurrence_scores(
-    occurrences: DataFrame, persons_in_conv: DataFrame, meta: DataFrame
-) -> DataFrame:
-    """→ (conv_id, name1, name2, score), name1 < name2."""
-    dists = pair_distances(occurrences).unionByName(biographee_priors(persons_in_conv, meta))
-    return score_pairs(dists)
-
-
-# ------------------------------------------------- in-UDF per-conv path
 def fold_scores(distances: list[float]) -> float:
     """The reference's sequential fold (Cooccurrence.py:92-111): sorted
     ascending; first term full, k-th term depreciated by 0.65^(2^(k-2))."""

@@ -67,7 +67,8 @@ def incremental_minhash_dedup(
 ) -> tuple[DataFrame, DataFrame]:
     """Merge a batch of new documents into the dedup state.
 
-    → (labels, buckets_delta):
+    → (labels, buckets_delta), both materialized (local checkpoints —
+    chained increments plan in constant size):
     labels        — (doc_id, cluster, is_keeper) over every document that
                     has ever had a verified duplicate edge (the
                     minhash_dedup_clusters shape; singletons omitted).
@@ -118,7 +119,11 @@ def incremental_minhash_dedup(
 
     from .dedup import jaccard_verify
 
-    verified = jaccard_verify(profs, edges, threshold=threshold)
+    # materialized once: the verified edge set is delta-bounded, and the
+    # label maintenance below reads it several times (the CC size probe,
+    # its edge collect, the new-vertex join) — each read would otherwise
+    # re-run bucket lookup, verification and the caller's state lineage
+    verified = jaccard_verify(profs, edges, threshold=threshold).localCheckpoint()
 
     from .canonicalize import incremental_components
 
@@ -146,4 +151,11 @@ def incremental_minhash_dedup(
         .join(base_members, ["band", "bucket", "doc_id"], "left_anti")
         .select("band", "bucket", "doc_id")
     )
-    return labels, buckets_delta
+    # Both outputs are the NEXT increment's inputs (labels → prior_labels,
+    # buckets_delta → the appended store), and incremental_components
+    # reads prior_labels 3-5 times: returned lazily, each chained call
+    # would embed its predecessor's whole plan that many times (~8x
+    # logical-plan growth per increment — minutes of driver analysis and
+    # a driver OOM by the third). Materializing them truncates the lineage
+    # so every increment plans in O(1) of its predecessors.
+    return labels.localCheckpoint(), buckets_delta.localCheckpoint()

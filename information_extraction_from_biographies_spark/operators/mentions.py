@@ -50,7 +50,6 @@ def _make_extract_group(user_dict_index: dict | None, lex: "Lexicons"):
 def extract_people_combined(
     turns: DataFrame,
     meta: DataFrame | None = None,
-    pre_sorted: bool = False,
     user_dict=None,
     pre_partitioned: bool = False,
     partitioner: str = "hash",
@@ -84,7 +83,6 @@ def extract_people_combined(
         enriched,
         _make_extract_group(index, lexicons or DEFAULT_LEXICONS),
         _EXTRACT_SCHEMA,
-        pre_sorted=pre_sorted,
         pre_partitioned=pre_partitioned,
         partitioner=partitioner,
     )
@@ -171,62 +169,6 @@ def people_from_bits(bits: DataFrame) -> DataFrame:
             | ((F.col("bits").bitwiseAND(1) > 0) & (F.col("bits").bitwiseAND(4) == 0))
         )
         .select(F.col("person").alias("name"))
-    )
-
-
-def registry_surfaces_fused(conv_names: DataFrame, conv_aliases: DataFrame) -> DataFrame:
-    """(person, surface, kind) in ONE hash aggregate: the flag union of
-    build_registry and the surface union of registry_surfaces fused so the
-    probe-dictionary collect (the pipeline's first action) runs one
-    shuffle instead of three (registry distinct + people agg + surface
-    distinct each cost a full AQE stage round-trip on the critical path;
-    measured ~4s → ~1.5s on the sf0.1 flagship). Exactly equal to
-    registry_surfaces(build_registry(...)) — pinned by a parity test."""
-    cand = (
-        conv_names.select(
-            F.col("name").alias("person"),
-            F.lit(None).cast("string").alias("surface"),
-            F.lit(None).cast("string").alias("kind"),
-            F.lit(1).alias("f"),
-        )
-        .unionByName(
-            conv_aliases.select(
-                F.col("name").alias("person"),
-                F.col("alias").alias("surface"),
-                F.col("alias_type").alias("kind"),
-                F.lit(2).alias("f"),
-            )
-        )
-        .unionByName(
-            conv_aliases.filter(F.col("alias").isNotNull()).select(
-                F.col("alias").alias("person"),
-                F.lit(None).cast("string").alias("surface"),
-                F.lit(None).cast("string").alias("kind"),
-                F.lit(4).alias("f"),
-            )
-        )
-    )
-    agg = cand.groupBy("person").agg(
-        F.bit_or("f").alias("bits"),
-        # collect_set drops the null structs from the name/stub branches
-        F.collect_set(
-            F.when(F.col("surface").isNotNull(), F.struct("surface", "kind"))
-        ).alias("surfs"),
-    )
-    people = agg.filter(
-        (F.col("bits").bitwiseAND(2) > 0)
-        | ((F.col("bits").bitwiseAND(1) > 0) & (F.col("bits").bitwiseAND(4) == 0))
-    )
-    # canonical-name surface + each alias surface; distinct within the
-    # person's array (no extra shuffle)
-    surfaces = F.array_distinct(
-        F.concat(
-            F.array(F.struct(F.col("person").alias("surface"), F.lit("name").alias("kind"))),
-            F.col("surfs"),
-        )
-    )
-    return people.select("person", F.explode(surfaces).alias("s")).select(
-        "person", F.col("s.surface").alias("surface"), F.col("s.kind").alias("kind")
     )
 
 

@@ -1,17 +1,12 @@
-"""J1 — the mention-scan join (people registry ⋈ conversation text).
+"""J1 — the probe dictionary of the mention scan (people registry ⋈
+conversation text).
 
 Semantically ``transcripts JOIN registry ON contains(text, surface)`` — a
 BroadcastNestedLoopJoin if written in SQL. The scalable physical strategy
-(SURVEY.md §4) is an Aho-Corasick automaton over the broadcast registry,
-one pass per conversation inside applyInPandas.
-
-Emits two row kinds per conversation:
-- 'occ'    — clause-positioned occurrences (repeatOK=True semantics:
-             one row per (clause, person, surface) containment,
-             Utilities.py:49-67 + Cooccurrence.py:35-53, incl. the
-             dropped-trailing-clause quirk)
-- 'person' — distinct persons found anywhere in the full text
-             (repeatOK=False scan; feeds A4 biographee priors and N5)
+(SURVEY.md §4) is an Aho-Corasick automaton over the distributed registry,
+walked once per conversation. The walk itself runs inside the fused
+stage-2 pass (``stage2.fused_scan_extract``, its 'person' and 'occ' rows);
+this module builds the handle that ships the registry to the workers.
 
 Scale notes: two distribution paths for the probe dictionary, identical
 scan output (tests/test_scan_paths.py). Default: raw registry rows are
@@ -19,19 +14,15 @@ broadcast and each worker builds the automaton once (≈100 B/surface).
 Huge registries (≥10^7 surfaces, where the driver collect + broadcast
 re-ship is the bottleneck): ``build_surface_index(via_file=...)`` leaves
 the registry on parquet and each worker reads + builds locally.
+``Pipeline`` picks the path from the committed registry row count
+(``plans/pipeline.REGISTRY_VIA_FILE_ROWS``).
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F  # noqa: N812
 
-from ..functions.clauses import split_clauses_with_offsets
-from ..functions.grouped import grouped_map, ordered_group
 from ..functions.matcher import SurfaceIndexHandle
-
-_SCAN_SCHEMA = "conv_id string, kind string, pos int, person string, surface string"
 
 
 def build_surface_index(surfaces_df: DataFrame, via_file: str | None = None):
@@ -65,40 +56,3 @@ def build_surface_index(surfaces_df: DataFrame, via_file: str | None = None):
         if s is not None
     ]
     return SurfaceIndexHandle(surfaces_df.sparkSession, rows)
-
-
-def scan_mentions(turns: DataFrame, index) -> DataFrame:
-    """→ (conv_id, kind, pos, person, surface); see module docstring.
-    ``index``: SurfaceIndexHandle or FileSurfaceIndexHandle."""
-    getter = index.worker_getter()
-
-    def _scan(pdf: pd.DataFrame) -> pd.DataFrame:
-        idx = getter()
-        conv_id = pdf["conv_id"].iloc[0]
-        ordered = ordered_group(pdf)
-        text = "\n\n".join(str(t) for t in ordered["norm_text"] if t is not None)
-        rows = []
-        # one automaton pass serves detection + per-clause occurrences
-        # (see SurfaceIndex.scan_text_clauses)
-        clause_off = split_clauses_with_offsets(text)
-        detected, clause_matches = idx.scan_text_clauses(
-            text, [(s, s + len(c)) for c, _pos, s in clause_off]
-        )
-        for person in detected:
-            rows.append((conv_id, "person", -1, person, None))
-        for (_clause, pos, _s), matches in zip(clause_off, clause_matches):
-            for person, surface, _k in matches:
-                rows.append((conv_id, "occ", pos, person, surface))
-        return pd.DataFrame(rows, columns=["conv_id", "kind", "pos", "person", "surface"])
-
-    return grouped_map(
-        turns.select("conv_id", "turn_idx", "norm_text"), _scan, _SCAN_SCHEMA
-    )
-
-
-def occurrences(scan: DataFrame) -> DataFrame:
-    return scan.filter(F.col("kind") == "occ").select("conv_id", "pos", "person", "surface")
-
-
-def persons_in_conv(scan: DataFrame) -> DataFrame:
-    return scan.filter(F.col("kind") == "person").select("conv_id", "person")

@@ -2,21 +2,28 @@
 mention scan (J1), verb-relation cascade (N5), hometown (N7), and timeline
 (N6) together.
 
-The unfused operators (scan.scan_mentions, triples.verb_triples, ...)
-remain the unit-testable building blocks; this fusion is the pipeline's
-hot path. Rationale (measured at sandbox scale): each grouped_map pass
-shuffles the full turn text (~600 B/turn); five separate passes moved 5x
-the bytes and the sandbox VM is memory-bandwidth-bound — fusing to one
-pass removed the per-conv (person, surface) join table (1.4M rows at 20k
-convs) and its collect_list/broadcast machinery entirely, since the
-worker-side automaton already knows every person's surfaces
-(Relationship.py:53-59 semantics via SurfaceIndex.person_surfaces).
+It also folds the A2-A4 co-occurrence scores. This is the only
+implementation of those operators: one Python UDF boundary per
+conversation instead of five. Rationale (measured on a 32-vCPU VM):
+each grouped_map pass shuffles the full turn text (~600 B/turn); five
+separate passes moved 5x the bytes and that VM is memory-bandwidth-bound
+— fusing to one pass removed the per-conv (person, surface) join table
+(1.4M rows at 20k convs) and its collect_list/broadcast machinery
+entirely, since the worker-side automaton already knows every person's
+surfaces (Relationship.py:53-59 semantics via
+SurfaceIndex.person_surfaces). The per-conversation kernels
+live in ``functions/`` (matcher, relations, extraction, timeline) and
+``cooccurrence.conv_pair_scores``.
 
 Output is a tagged union split by cheap filters downstream:
     kind='person'   → (a=person)                      repeatOK=False scan
-    kind='occ'      → (pos, a=person, b=surface)      clause occurrences
+    kind='occ'      → (pos, a=person, b=surface)      clause occurrences:
+                      repeatOK=True, one row per (clause, person, surface)
+                      containment (Utilities.py:49-67, Cooccurrence.py:35-53,
+                      incl. the dropped-trailing-clause quirk)
     kind='triple'   → (a=subj, b=pred, c=obj, source) verb + born-in
     kind='timeline' → (year, a=event, start_pos)
+    kind='cooc'     → (a=name1, b=name2, score)        A2/A3/A4 fold
 """
 
 from __future__ import annotations
@@ -46,7 +53,6 @@ def fused_scan_extract(
     turns: DataFrame,
     meta: DataFrame | None,
     index: SurfaceIndexHandle,
-    pre_sorted: bool = False,
     pre_partitioned: bool = False,
     partitioner: str = "hash",
     lexicons=None,
@@ -111,7 +117,6 @@ def fused_scan_extract(
         enriched,
         _go,
         _SCHEMA,
-        pre_sorted=pre_sorted,
         pre_partitioned=pre_partitioned,
         partitioner=partitioner,
     )
@@ -119,14 +124,14 @@ def fused_scan_extract(
 
 # ------------------------------------------------------------- splitters
 def mention_rows(fused: DataFrame) -> DataFrame:
-    """Same shape as scan.scan_mentions output."""
+    """(conv_id, kind∈{person, occ}, pos, person, surface)."""
     return fused.filter(F.col("kind").isin("person", "occ")).select(
         "conv_id", "kind", "pos", F.col("a").alias("person"), F.col("b").alias("surface")
     )
 
 
 def text_triples(fused: DataFrame) -> DataFrame:
-    """verb + born-in channels, TRIPLE_COLS shape."""
+    """verb + born-in channels: (conv_id, subj, pred, obj, source)."""
     return fused.filter(F.col("kind") == "triple").select(
         "conv_id",
         F.col("a").alias("subj"),
@@ -137,14 +142,14 @@ def text_triples(fused: DataFrame) -> DataFrame:
 
 
 def timeline_rows(fused: DataFrame) -> DataFrame:
-    """Same shape as triples.timeline_table output."""
+    """(conv_id, year, event, start_pos) — triples.timeline_table's shape."""
     return fused.filter(F.col("kind") == "timeline").select(
         "conv_id", "year", F.col("a").alias("event"), "start_pos"
     )
 
 
 def cooc_scores(fused: DataFrame) -> DataFrame:
-    """Same shape as cooccurrence.cooccurrence_scores output."""
+    """(conv_id, name1, name2, score), name1 < name2."""
     return fused.filter(F.col("kind") == "cooc").select(
         "conv_id", F.col("a").alias("name1"), F.col("b").alias("name2"), "score"
     )

@@ -1,15 +1,22 @@
-"""Stage 2 — candidate (subj, pred, obj) triple extraction.
+"""Stage 2 — the relational triple channels and the timeline kernel pass.
 
-Four channels, each a named `source`:
+Four channels make up the stage-2 triple table, each a named `source`:
 
 - kinship   — restore of the 親屬關係暫存 packing (J4, Relationship.py:24-33):
-              pure relational — filter + split, no UDF.
-- verb      — N5 rule cascade per conversation (applyInPandas).
+              pure relational — filter + split, no UDF (here).
+- verb      — N5 rule cascade per conversation.
 - born-in   — N7 hometown regex (Biographee_Info.py:22-28).
-- vital     — N8 born-on / died-on / author triples from stage-0 meta.
+- vital     — N8 born-on / died-on / author triples from stage-0 meta
+              (here).
+
+The verb and born-in channels read the conversation text, so they run
+inside the fused stage-2 pass (``stage2.fused_scan_extract``); the union
+of all four is ``stage2.all_triples_fused``.
 
 Timeline (N6) is a separate table (`timeline`), not a triple channel, as in
-the reference.
+the reference. The pipeline's raw timeline comes from the fused pass;
+``timeline_table`` here is the standalone pass that also offers the
+concise (dependency-condensed) variant.
 """
 
 from __future__ import annotations
@@ -18,14 +25,10 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F  # noqa: N812
 
-from ..functions.extraction import KIN_TEMP_TYPE, extract_hometown
+from ..functions.extraction import KIN_TEMP_TYPE
 from ..functions.grouped import grouped_map, ordered_group
-from ..functions.matcher import SurfaceIndexHandle
-from ..functions.relations import extract_relations_for_conv
 from ..functions.timeline import extract_timeline
 
-TRIPLE_COLS = ["conv_id", "subj", "pred", "obj", "source"]
-_TRIPLE_SCHEMA = "conv_id string, subj string, pred string, obj string, source string"
 _TIMELINE_SCHEMA = "conv_id string, year int, event string, start_pos int"
 
 
@@ -39,93 +42,6 @@ def kinship_triples(conv_aliases: DataFrame) -> DataFrame:
         F.col("name").alias("obj"),
         F.lit("kinship").alias("source"),
     )
-
-
-def conv_person_surfaces(detected_persons: DataFrame, registry_surfaces_df: DataFrame) -> DataFrame:
-    """(conv_id, person, surface): each person the mention scan detected in
-    a conversation × every surface of that person (the reference's
-    get_all_names_of_people, Relationship.py:53-59) — a hash join against
-    the registry instead of a per-worker automaton rebuild. No broadcast
-    hint: the registry is vocabulary-scale (every distinct person), so AQE
-    broadcasts it only while it actually fits and degrades to a plain
-    shuffle equi-join on person past the threshold; the shape is
-    unchanged."""
-    # no distinct needed: detected_persons is unique per (conv_id, person)
-    # by construction (repeatOK=False scan) and the registry surface table
-    # is globally distinct — the join is already key-unique.
-    surf = registry_surfaces_df.select("person", "surface")
-    return detected_persons.join(surf, "person").select(
-        "conv_id", "person", "surface"
-    )
-
-
-def verb_triples(turns: DataFrame, meta: DataFrame, person_surfaces_df: DataFrame) -> DataFrame:
-    """N5 per conversation. The persons present come from the stage-2
-    mention scan (one automaton pass, J1); this operator is downstream of
-    it relationally: per-conv (person, surface) pairs are aggregated with
-    collect_list and co-shuffled with the turns on conv_id — no automaton
-    here, so the stage is pure Python-kernel work over its Arrow batches."""
-    per_conv = person_surfaces_df.groupBy("conv_id").agg(
-        F.collect_list(F.struct("person", "surface")).alias("pairs")
-    )
-
-    def _rel(pdf: pd.DataFrame) -> pd.DataFrame:
-        conv_id = pdf["conv_id"].iloc[0]
-        ordered = ordered_group(pdf)
-        text = "\n\n".join(str(t) for t in ordered["norm_text"] if t is not None)
-        bio_vals = [b for b in ordered["biographee"] if isinstance(b, str) and b]
-        pairs_raw = next((p for p in pdf["pairs"] if p is not None and len(p) > 0), None)
-        if not bio_vals or pairs_raw is None:
-            return pd.DataFrame(columns=TRIPLE_COLS)
-        biographee = bio_vals[0]
-        pairs = sorted({(d["person"], d["surface"]) for d in pairs_raw})
-        triples = extract_relations_for_conv(text, biographee, pairs)
-        return pd.DataFrame(
-            [(conv_id, s, p, o, "verb") for (s, p, o) in sorted(set(triples))],
-            columns=TRIPLE_COLS,
-        )
-
-    # pairs ride ONLY on the turn-0 row: joining them onto every turn makes
-    # Arrow materialize the struct array per row (|turns| × |pairs| python
-    # dicts). Convs without turn 0 have no meta row either (normalize reads
-    # the title from turn 0), so nothing is lost on the rest branch.
-    # biographee likewise rides the turn-0 row (stage-0 threading) — no
-    # corpus-scale meta join (normalize.with_biographee).
-    from .normalize import with_biographee
-
-    base = with_biographee(turns, meta)
-    pairs_type = "array<struct<person:string,surface:string>>"
-    turn0 = base.filter(F.col("turn_idx") == 0).join(per_conv, "conv_id", "left")
-    rest = base.filter(F.col("turn_idx") != 0).withColumn(
-        "pairs", F.lit(None).cast(pairs_type)
-    )
-    enriched = turn0.unionByName(rest)
-    return grouped_map(enriched, _rel, _TRIPLE_SCHEMA)
-
-
-def hometown_triples(turns: DataFrame, meta: DataFrame, lexicons=None) -> DataFrame:
-    """N7: first ({place})人[，。] match over the conversation text.
-    ``lexicons``: gazetteers.Lexicons for the place probe; None → defaults."""
-    from ..gazetteers import DEFAULT_LEXICONS
-
-    lex = lexicons or DEFAULT_LEXICONS
-
-    def _home(pdf: pd.DataFrame) -> pd.DataFrame:
-        conv_id = pdf["conv_id"].iloc[0]
-        ordered = ordered_group(pdf)
-        text = "\n\n".join(str(t) for t in ordered["norm_text"] if t is not None)
-        bio_vals = [b for b in ordered["biographee"] if isinstance(b, str) and b]
-        place = extract_hometown(text, lex)
-        if not bio_vals or place is None:
-            return pd.DataFrame(columns=TRIPLE_COLS)
-        return pd.DataFrame(
-            [(conv_id, bio_vals[0], "born-in", place, "born-in")], columns=TRIPLE_COLS
-        )
-
-    from .normalize import with_biographee
-
-    enriched = with_biographee(turns, meta)
-    return grouped_map(enriched, _home, _TRIPLE_SCHEMA)
 
 
 def vital_triples(meta: DataFrame) -> DataFrame:
@@ -195,36 +111,4 @@ def timeline_table(
 
     return grouped_map(
         turns.select("conv_id", "turn_idx", "norm_text"), _tl, _TIMELINE_SCHEMA
-    )
-
-
-def all_triples(
-    conv_aliases: DataFrame,
-    turns: DataFrame,
-    meta: DataFrame,
-    index: SurfaceIndexHandle,
-    mention_rows: DataFrame | None = None,
-    registry_surfaces_df: DataFrame | None = None,
-    lexicons=None,
-) -> DataFrame:
-    """Union of the four channels. Pass ``mention_rows`` (the stage-2 scan
-    output — persist it, co-occurrence reads it too) so the automaton runs
-    once; without it the scan is computed here. ``lexicons``: a
-    gazetteers.Lexicons bundle threaded to the hometown (N7) place probe;
-    None → defaults (every other channel reads only its inputs)."""
-    from . import scan as scan_op
-
-    if mention_rows is None:
-        mention_rows = scan_op.scan_mentions(turns, index)
-    detected = scan_op.persons_in_conv(mention_rows)
-    if registry_surfaces_df is None:
-        registry_surfaces_df = turns.sparkSession.createDataFrame(
-            [(s, p) for (s, p, _k) in index.rows], "surface string, person string"
-        )
-    ps = conv_person_surfaces(detected, registry_surfaces_df)
-    return (
-        kinship_triples(conv_aliases)
-        .unionByName(verb_triples(turns, meta, ps))
-        .unionByName(hometown_triples(turns, meta, lexicons=lexicons))
-        .unionByName(vital_triples(meta))
     )

@@ -620,7 +620,7 @@ def maintain(
     (operational escape hatch). Returns ``(path, result)`` with ``path``
     the choice made. ``pipeline_kwargs`` are forwarded to whichever
     pipeline runs; kwargs only the OTHER path accepts are dropped for the
-    chosen one (``gram_index``/``registry_via_file``/... are batch-only,
+    chosen one (``gram_index``/``cc_salt``/... are batch-only,
     ``rescan_via_file``/``enable_cow``/... incremental-only — an operator
     setting them must not crash the day the policy flips paths), while a
     kwarg NEITHER accepts raises immediately (typo protection).
@@ -785,8 +785,9 @@ class IncrementalPipeline:
     ) -> None:
         """``rescan_via_file``: distribute the changed-surface probe set
         via a parquet under the warehouse instead of driver collect +
-        broadcast — the ≥10^7-changed-surface path, same escape hatch the
-        batch registry has (Pipeline.registry_via_file). Affected-conv
+        broadcast — the ≥10^7-changed-surface path, the same file path the
+        batch pipeline picks for its registry at that size
+        (pipeline.REGISTRY_VIA_FILE_ROWS). Affected-conv
         output is identical on both paths (tests/test_incremental.py).
 
         ``enable_cow``: copy-on-write vocabulary commits when the base

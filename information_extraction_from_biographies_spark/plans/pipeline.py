@@ -23,14 +23,12 @@ from pyspark.sql import functions as F  # noqa: N812
 
 from ..operators import (
     canonicalize,
-    cooccurrence,
     graph,
     mentions,
     normalize,
     postings,
     scan,
     stage2,
-    triples,
 )
 from ..sources.checkpoint import CheckpointStore
 
@@ -142,6 +140,15 @@ AUTO_BUCKET_MIN_BYTES = 1 << 30
 AUTO_BUCKET_TARGET_BYTES = 128 << 20
 AUTO_BUCKET_MAX = 4096
 
+# stage-2 probe-dictionary distribution: at or above this many committed
+# registry rows (stage1_people + stage1_alias_registry, read from lineage —
+# no extra job) the registry stays on parquet and each worker builds its
+# automaton from the file, instead of a driver collect + broadcast. 10^7
+# surfaces is the scale where the collect (~100 B/surface → ~1 GB of
+# driver heap) and the broadcast re-ship become the bottleneck
+# (operators/scan.py); below it the collect path is cheaper.
+REGISTRY_VIA_FILE_ROWS = 10**7
+
 
 def auto_bucket_count(df: DataFrame) -> int:
     """Size BUCKET_KEYS commits from the INPUT's on-disk bytes — the
@@ -216,7 +223,6 @@ class Pipeline:
         cc_salt: int = 0,
         user_dict=None,
         lexicons=None,
-        registry_via_file: bool = False,
         buckets: int | None = None,
         gram_index: bool = True,
         gram_max_df: int | None = None,
@@ -233,11 +239,6 @@ class Pipeline:
         None → the built-in representative defaults. Load the
         reference's public JSON gazetteers with
         ``gazetteers.lexicons_from_tools(spark, tools_dir)``.
-
-        ``registry_via_file``: distribute the stage-2 probe dictionary via
-        a registry parquet under the warehouse instead of driver collect +
-        broadcast — the ≥10^7-surface path (scan.build_surface_index
-        via_file).
 
         ``buckets``: bucket count for the BUCKET_KEYS stage commits
         (0 disables bucketing and commits plain parquet; None → sized
@@ -284,7 +285,6 @@ class Pipeline:
         self.cc_salt = cc_salt
         self.user_dict = user_dict
         self.lexicons = lexicons
-        self.registry_via_file = registry_via_file
         self.buckets = buckets
         self.gram_index = gram_index
         self.gram_max_df = gram_max_df
@@ -453,8 +453,14 @@ class Pipeline:
         # verb cascade, hometown, and timeline together (operators/stage2);
         # the three stage tables are filters over the persisted union.
         surfaces_df = mentions.registry_surfaces(people, alias_reg)
+        registry_rows = sum(
+            self.store.lineage(t, sid)["total_rows"]
+            for t in ("stage1_people", "stage1_alias_registry")
+        )
         via_file = (
-            f"{self.warehouse}/_registry/surfaces-{sid}" if self.registry_via_file else None
+            f"{self.warehouse}/_registry/surfaces-{sid}"
+            if registry_rows >= REGISTRY_VIA_FILE_ROWS
+            else None
         )
         index = scan.build_surface_index(surfaces_df, via_file=via_file)
         fused = stage2.fused_scan_extract(

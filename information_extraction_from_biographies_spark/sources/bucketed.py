@@ -32,7 +32,7 @@ catalog (with the sandbox's in-memory catalog it lasts the session; a
 cluster uses a Hive/Glue/Iceberg catalog and the layout is permanent), and
 ``sortBy`` ordering is per-FILE — a bucket written by several tasks has
 several sorted files, so we do NOT claim sort-based guarantees for the
-``grouped_map`` pre_sorted contract, only distribution guarantees for
+``grouped_map`` sort contract, only distribution guarantees for
 joins/aggregations (which the planner itself verifies).
 """
 

@@ -166,3 +166,31 @@ def test_redelivered_batch_is_idempotent_and_cap_safe(spark):
     assert _labels_dict(labels2) == _labels_dict(labels1)
     for df in (profs, p01, buckets0, store1):
         df.unpersist()
+
+
+def test_chained_increments_plan_stays_bounded(spark):
+    """Each increment's labels and bucket rows feed the next increment.
+    The labels' logical plan must not grow with the chain length (lazily
+    returned labels embedded the prior plan 3-5 times per increment,
+    ~8x growth — a driver OOM by the third), and the chained result
+    still equals the batch clusters."""
+    docs = _family_docs(n_families=3, members=5)
+    profs = minhash_profiles(
+        spark.createDataFrame(docs, "doc_id long, text string")
+    ).persist()
+    want = _labels_dict(minhash_dedup_clusters(profs, bands=BANDS))
+
+    store, seen = _empty_state(spark)
+    labels = None
+    sizes = []
+    for k in range(5):  # bootstrap + 4 chained increments
+        batch = profs.filter(F.col("doc_id") % 5 == k)
+        labels, delta = incremental_minhash_dedup(batch, store, seen, labels, bands=BANDS)
+        sizes.append(len(labels._jdf.queryExecution().logical().toString()))
+        assert sizes[-1] < 20_000, sizes  # fail fast: a lazy chain never returns
+        # the caller's append to its stored state (a commit in production)
+        store = store.unionByName(delta).localCheckpoint()
+        seen = seen.unionByName(batch).localCheckpoint()
+    assert max(sizes) <= 2 * sizes[0], sizes
+    assert _labels_dict(labels) == want
+    profs.unpersist()

@@ -159,10 +159,10 @@ def test_pipeline_parity_at_public_dictionary_scale(spark, tmp_path):
 
 def test_all_triples_threads_lexicons_to_hometown(spark):
     """The operator-level composition path honors a custom place
-    gazetteer: all_triples(..., lexicons=...) threads it to the N7
-    hometown channel (previously the one call site that silently fell
-    back to DEFAULT_LEXICONS — custom places were never extracted)."""
-    from information_extraction_from_biographies_spark.operators import scan, triples
+    gazetteer: fused_scan_extract(..., lexicons=...) threads it to the N7
+    hometown channel of the stage-2 triple table (a call site that falls
+    back to DEFAULT_LEXICONS never extracts custom places)."""
+    from information_extraction_from_biographies_spark.operators import scan, stage2
 
     place = "㐀㐁"  # CJK Ext-A — absent from the built-in place list
     assert place not in gz.DEFAULT_LEXICONS.places
@@ -184,11 +184,15 @@ def test_all_triples_threads_lexicons_to_hometown(spark):
     )
     index = scan.build_surface_index(surfaces)
 
-    got = triples.all_triples(aliases, turns, meta, index, lexicons=custom)
+    def all_triples(lexicons=None):
+        fused = stage2.fused_scan_extract(turns, meta, index, lexicons=lexicons)
+        return stage2.all_triples_fused(fused, aliases, meta)
+
+    got = all_triples(lexicons=custom)
     born = [
         (r.subj, r.pred, r.obj) for r in got.filter("source = 'born-in'").collect()
     ]
     assert born == [("陳一", "born-in", place)]
     # defaults miss it — proves the parameter, not the text, did the work
-    missed = triples.all_triples(aliases, turns, meta, index)
+    missed = all_triples()
     assert missed.filter("source = 'born-in'").count() == 0

@@ -768,7 +768,7 @@ def test_maintain_kwargs_filtered_per_path(spark, tmp_path):
     # ...and batch-only kwargs survive an incremental decision
     path2, _ = maintain(
         spark, wh, "s2", "s3", delta_t,
-        force="incremental", registry_via_file=True, gram_index=False, cc_salt=1,
+        force="incremental", gram_index=False, cc_salt=1,
     )
     assert path2 == "incremental"
 

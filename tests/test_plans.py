@@ -115,7 +115,9 @@ def test_flagship_has_no_meta_broadcast(spark):
         plan1 = plan_of(extracted, "simple")
         assert "BroadcastExchange" not in plan1 and "Join" not in plan1
         conv_names, conv_aliases = mentions.split_extracted(extracted)
-        surfaces = mentions.registry_surfaces_fused(conv_names, conv_aliases)
+        surfaces = mentions.registry_surfaces(
+            *mentions.build_registry(conv_names, conv_aliases)
+        )
         index = scan.build_surface_index(surfaces)
         fused = stage2.fused_scan_extract(turns, meta, index)
         plan2 = plan_of(fused, "simple")

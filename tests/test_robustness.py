@@ -64,15 +64,23 @@ def test_sparse_turn_idx_and_null_text(spark):
     assert res.tables["turns"].count() == 3
 
 
-def test_pipeline_registry_via_file_matches_broadcast(spark, tmp_path):
-    """Pipeline(registry_via_file=True) — the huge-registry distribution
-    path — must produce the identical triple set."""
+def test_pipeline_registry_via_file_matches_broadcast(spark, tmp_path, monkeypatch):
+    """The registry-size rule picks the probe-dictionary path: below
+    REGISTRY_VIA_FILE_ROWS committed registry rows the driver collects and
+    broadcasts; at or above it the registry stays on parquet (the
+    huge-registry path). Both must produce the identical triple set."""
+    import os
+
     from information_extraction_from_biographies_spark import fixtures as fx
+    from information_extraction_from_biographies_spark.plans import pipeline
 
     f = fx.make_fixture(n_convs=8, seed=21)
     tdf = fx.transcripts_sdf(spark, f)
     a = Pipeline(spark, str(tmp_path / "w1"), snapshot_id="a").run(tdf)
-    b = Pipeline(spark, str(tmp_path / "w2"), snapshot_id="b", registry_via_file=True).run(tdf)
+    monkeypatch.setattr(pipeline, "REGISTRY_VIA_FILE_ROWS", 1)
+    b = Pipeline(spark, str(tmp_path / "w2"), snapshot_id="b").run(tdf)
+    assert not os.path.exists(tmp_path / "w1" / "_registry")
+    assert os.path.isdir(tmp_path / "w2" / "_registry" / "surfaces-b")
     tri_a = {(r.subj, r.pred, r.obj) for r in a.tables["triples"].collect()}
     tri_b = {(r.subj, r.pred, r.obj) for r in b.tables["triples"].collect()}
     assert tri_a == tri_b and len(tri_a) > 0

@@ -3,9 +3,7 @@ produce identical scan output, and the S7 debug sinks round-trip."""
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F  # noqa: N812
-
-from information_extraction_from_biographies_spark.operators import debug_sink, scan
+from information_extraction_from_biographies_spark.operators import debug_sink, scan, stage2
 
 
 def _surfaces_df(spark, n: int = 100_000):
@@ -19,11 +17,11 @@ def _surfaces_df(spark, n: int = 100_000):
 def _turns_df(spark):
     return spark.createDataFrame(
         [
-            ("c1", 0, "甲山與乙川會面，甲山致詞。"),
-            ("c1", 1, "乙川回訪。"),
-            ("c2", 0, "person000007到場，person042000未到。"),
+            ("c1", 0, "甲山與乙川會面，甲山致詞。", None),
+            ("c1", 1, "乙川回訪。", None),
+            ("c2", 0, "person000007到場，person042000未到。", None),
         ],
-        "conv_id string, turn_idx int, norm_text string",
+        "conv_id string, turn_idx int, norm_text string, biographee string",
     )
 
 
@@ -35,9 +33,10 @@ def test_file_index_path_matches_broadcast_path(spark, tmp_path):
     file_handle = scan.build_surface_index(surfaces, via_file=str(tmp_path / "registry"))
 
     def rows_of(index):
+        fused = stage2.fused_scan_extract(turns, None, index)
         return sorted(
             (r["conv_id"], r["kind"], r["pos"], r["person"], r["surface"])
-            for r in scan.scan_mentions(turns, index).collect()
+            for r in stage2.mention_rows(fused).collect()
         )
 
     a = rows_of(bcast_handle)
@@ -110,28 +109,3 @@ def test_timeline_table_concise_end_to_end(spark):
     assert got == {(1951, "創立報社"), (1953, "聲名遠播")}
     full = {(r["year"], r["event"]) for r in timeline_table(turns).collect()}
     assert full == {(1951, "與友人創立報社而聞名"), (1953, "聲名遠播")}
-
-
-def test_registry_surfaces_fused_parity(spark):
-    """The one-shuffle fused surfaces aggregate equals the 3-shuffle
-    registry chain (modulo null surfaces, which the automaton ignores)."""
-    from pyspark.sql import functions as F
-
-    from information_extraction_from_biographies_spark import fixtures as fx
-    from information_extraction_from_biographies_spark.operators import mentions, normalize
-
-    tdf = fx.transcripts_sdf(spark, fx.make_fixture(n_convs=12, seed=21))
-    turns, meta = normalize.normalize(tdf)
-    conv_names, conv_aliases = mentions.extract_people(turns, meta)
-    people, aliases = mentions.build_registry(conv_names, conv_aliases)
-    old = {
-        (r["person"], r["surface"], r["kind"])
-        for r in mentions.registry_surfaces(people, aliases)
-        .filter(F.col("surface").isNotNull())
-        .collect()
-    }
-    new = {
-        (r["person"], r["surface"], r["kind"])
-        for r in mentions.registry_surfaces_fused(conv_names, conv_aliases).collect()
-    }
-    assert new == old and len(new) > 0

@@ -7,10 +7,10 @@ import pandas as pd
 
 from information_extraction_from_biographies_spark import fixtures as fx
 from information_extraction_from_biographies_spark.operators import (
-    cooccurrence,
     mentions,
     normalize,
     scan,
+    stage2,
 )
 
 
@@ -40,10 +40,7 @@ def test_skewed_conv_completes_with_correct_structure(spark):
     turns, meta = normalize.normalize(tdf)
     people, aliases = mentions.build_registry(*mentions.extract_people(turns, meta))
     index = scan.build_surface_index(mentions.registry_surfaces(people, aliases))
-    rows = scan.scan_mentions(turns, index)
-    cooc = cooccurrence.cooccurrence_scores(
-        scan.occurrences(rows), scan.persons_in_conv(rows), meta
-    ).persist()
+    cooc = stage2.cooc_scores(stage2.fused_scan_extract(turns, meta, index)).persist()
 
     per_conv = {r.conv_id: r.n for r in cooc.groupBy("conv_id").count().withColumnRenamed("count", "n").collect()}
     # giant conv produced pairs and didn't crash; small convs unaffected
@@ -59,7 +56,7 @@ def test_skewed_conv_completes_with_correct_structure(spark):
 
 
 def test_iter_key_groups_raises_on_non_contiguous_key():
-    """pre_sorted contract guard: a key recurring after its group closed
+    """grouped_map delivery-contract guard: a key recurring after its group closed
     (unsorted/mis-partitioned input) must raise, not silently fragment."""
     import pandas as pd
     import pytest

@@ -7,7 +7,8 @@ levels on the SAME materialized input (defaults; see BASE_CORES):
 
     taskset 0-1 local[2]  (N)    vs    taskset 0-7 local[8]  (4N)
 
-throughput T = triples/sec over the end-to-end KG pipeline (stages 0-4);
+throughput T = triples/sec over the end-to-end KG pipeline (stages 0-4:
+bench.kg_pipeline_run, one checkpointed Pipeline.run);
 efficiency = T(4N) / (4 * T(N)).
 
 Trial policy (matches BENCH/BASELINE.md): SPARK_GRAFT_SCALING_TRIALS

@@ -42,8 +42,6 @@ def main(argv: list[str] | None = None) -> None:
                     help="recompute every stage even if committed")
     ap.add_argument("--cc-salt", type=int, default=0,
                     help="salt factor for the CC hub-entity join (0 = off)")
-    ap.add_argument("--registry-via-file", action="store_true",
-                    help="distribute the probe registry via parquet (>=1e7 surfaces)")
     ap.add_argument("--shuffle-partitions", type=int, default=None)
     args = ap.parse_args(argv)
 
@@ -74,7 +72,6 @@ def main(argv: list[str] | None = None) -> None:
         warehouse,
         snapshot_id=args.snapshot,
         cc_salt=args.cc_salt,
-        registry_via_file=args.registry_via_file,
     ).run(transcripts, resume=not args.no_resume)
     counts = {name: df.count() for name, df in res.tables.items()}
     wall = time.monotonic() - t0
